@@ -559,6 +559,20 @@ def compact(expanded: list, context: Any, *, base_uri: str = "") -> tuple[dict, 
 # ------------------------------------------------------------------ flatten
 
 
+def _add_value(arr: list, keys: set[str], item: dict) -> None:
+    """Append ``item`` to a node-map property array unless an equal value
+    or node reference is already there (``keys`` holds the canonical
+    keys of ``arr``'s items). A list object mints a fresh bnode chain per
+    occurrence, so two equal sibling lists are two lists: it always
+    appends."""
+    if "@list" not in item:
+        key = canonical_json(item)
+        if key in keys:
+            return
+        keys.add(key)
+    arr.append(item)
+
+
 def flatten(expanded: list) -> list:
     """Flatten expanded JSON-LD: node-map generation with a fresh blank
     node issuer (``_:b0`` …), duplicate-node merge, reverse-property
@@ -631,10 +645,11 @@ def flatten(expanded: list) -> list:
             return v
         return {"@id": walk(v, graph)}
 
-    def _add(arr: list, item) -> None:
-        key = canonical_json(item)
-        if all(canonical_json(x) != key for x in arr):
-            arr.append(item)
+    # per property array: canonical keys of the values it already holds
+    seen: dict[int, set[str]] = {}
+
+    def _add(arr: list, item: dict) -> None:
+        _add_value(arr, seen.setdefault(id(arr), set()), item)
 
     for node in expanded:
         walk(node, "@default")
@@ -731,6 +746,7 @@ def frame(expanded: list, frame_doc: Any, *, base_uri: str = "") -> tuple[dict, 
 
     # --- merged node map from the flattened input
     nodes: dict[str, dict] = {}
+    seen: dict[int, set[str]] = {}  # per property array, as in flatten
 
     def absorb(arr: list) -> None:
         for n in arr:
@@ -748,10 +764,9 @@ def frame(expanded: list, frame_doc: Any, *, base_uri: str = "") -> tuple[dict, 
                             ts.append(t)
                     continue
                 tgt = entry.setdefault(k, [])
+                keys = seen.setdefault(id(tgt), set())
                 for item in v:
-                    key = canonical_json(item)
-                    if all(canonical_json(x) != key for x in tgt):
-                        tgt.append(item)
+                    _add_value(tgt, keys, item)
 
     absorb(flatten(expanded))
 

@@ -903,10 +903,11 @@ def paragraph_dedup(
 ) -> DataFrame:
     """CCNet-style corpus-wide PARAGRAPH dedup with reconstruction →
     (doc_id, n_paras, n_kept, clean_text): text splits at blank lines
-    (one-or-more empty/whitespace-only lines — the ccnet paragraph
-    unit), each paragraph dedupes corpus-wide on the shared
-    :func:`ccnet_norm` key, first occurrence (lowest (doc, para_idx))
-    wins, and survivors reassemble in order joined by a blank line.
+    (one-or-more empty/whitespace-only lines, LF or CRLF endings — WARC
+    and HTTP bodies keep CRLF — the ccnet paragraph unit), each
+    paragraph dedupes corpus-wide on the shared :func:`ccnet_norm` key,
+    first occurrence (lowest (doc, para_idx)) wins, and survivors
+    reassemble in order joined by a blank line.
     Same plan shape and totality contract as :func:`sentence_dedup`
     (same keeper helper); the coarser unit is what CCNet actually
     dedups by default — whole repeated footers/navboxes vanish in one
@@ -921,7 +922,7 @@ def paragraph_dedup(
         docs.select(
             F.col(id_col),
             F.posexplode(
-                F.split(F.col(text_col), r"\n[ \t]*\n+")
+                F.split(F.col(text_col), r"\r?\n[ \t]*(?:\r?\n)+")
             ).alias("para_idx", "paragraph"),
         )
         # keep only paragraphs with any non-whitespace (F.trim strips

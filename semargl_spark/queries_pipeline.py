@@ -2242,16 +2242,17 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document carries a shared footer paragraph whose digits and
     punctuation drift by parity (the ccnet_norm key must still match
     it) plus one unique paragraph (letter-encoded id); only the min
-    document keeps the footer; odd documents also carry a
-    whitespace-only pseudo-paragraph that must NOT count. Closed-form
-    oracle."""
+    document keeps the footer; odd documents break paragraphs with
+    CRLF (as WARC/HTTP bodies do) and also carry a whitespace-only
+    pseudo-paragraph that must NOT count. Closed-form oracle."""
     from .operators.dedup import paragraph_dedup
 
     d = F.col("doc_id").cast("long")
     lid = F.translate(d.cast("string"), "0123456789", "abcdefghij")
     text = F.concat(
-        F.lit("Unique para "), lid, F.lit(" body.\n\n"),
-        F.when(d % 2 == 1, F.lit("   \n\n")).otherwise(F.lit("")),
+        F.lit("Unique para "), lid, F.lit(" body."),
+        F.when(d % 2 == 1, F.lit("\r\n\r\n   \r\n\r\n"))
+        .otherwise(F.lit("\n\n")),
         F.when(d % 2 == 0, F.lit("Copyright 2026 site footer."))
         .otherwise(F.lit("copyright 2031 SITE footer!!")),
     )
@@ -2259,6 +2260,8 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return paragraph_dedup(docs)
 
 
+# every document splits into exactly two paragraphs whatever its line
+# endings (odd ids use CRLF); survivors rejoin with a bare blank line
 ORACLES["paragraph_dedup"] = """
 WITH ids AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
         translate(CAST(doc_id AS VARCHAR), '0123456789', 'abcdefghij')
@@ -2899,8 +2902,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "context_windows": q_context_windows,
         "bpe_pairs": q_bpe_pairs,
         "bpe_train": q_bpe_train,
-        "bpe_train_batched": q_bpe_train_batched,
-        "wordpiece_train_batched": q_wordpiece_train_batched,
         "bpe_segment": q_bpe_segment,
         "corpus_quantiles": q_corpus_quantiles,
         "kg_degree_stats": q_kg_degree_stats,
@@ -4042,27 +4043,11 @@ FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT 20
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative BPE tokenizer training, 8 merge rounds → the ordered
-    merge table (text.bpe_train): vocabulary-collapse-first, per-round
-    1-row argmax + JVM fold merge — subword-nmt semantics."""
+    """BPE tokenizer training, 8 merge rounds → the ordered merge table
+    (text.bpe_train): one distributed word-frequency collapse, then the
+    driver-local pair-index trainer — subword-nmt semantics, checked
+    against the unrolled-round DuckDB oracle."""
     return text.bpe_train(_docs(spark, sf_dir), n_merges=8)
-
-
-def q_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-vocabulary BPE path (text.bpe_train_batched): ONE
-    distributed word-frequency collapse, then the driver-local exact
-    pair-index trainer — bit-identical merge table to bpe_train
-    (shared oracle proves it), but 1 Spark job total instead of
-    O(n_merges); the path a 32k-100k-merge production vocab takes."""
-    return text.bpe_train_batched(_docs(spark, sf_dir), n_merges=8)
-
-
-def q_wordpiece_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-vocabulary WordPiece path
-    (text.wordpiece_train_batched): same one-collapse shape with the
-    likelihood-score argmax re-scanned per round driver-locally;
-    bit-identical to wordpiece_train (shared oracle)."""
-    return text.wordpiece_train_batched(_docs(spark, sf_dir), n_merges=8)
 
 
 def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4075,7 +4060,7 @@ def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_ctes(n_merges: int = 8) -> str:
     """Unrolled merge rounds: per round, a pair-count CTE over the
     current vocabulary, a 1-row argmax, and a list_reduce greedy
-    left-to-right merge — the same string fold the Spark side runs."""
+    left-to-right merge — the subword-nmt merge text.bpe_train runs."""
     sql = r"""
 WITH wf AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS c
             FROM (SELECT unnest(string_split(regexp_replace(
@@ -4123,9 +4108,6 @@ FROM v{n_merges}"""
 
 
 ORACLES["bpe_train"] = _bpe_train_oracle()
-# the batched trainer's claim IS bit-identity with the per-round loop,
-# so it shares the loop's unrolled-round oracle verbatim
-ORACLES["bpe_train_batched"] = _bpe_train_oracle()
 ORACLES["bpe_segment"] = _bpe_segment_oracle()
 
 
@@ -7827,10 +7809,10 @@ FROM w2
 
 
 def q_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative WordPiece tokenizer training, 8 merge rounds → the
-    ordered merge table with quantized likelihood scores
-    (text.wordpiece_train): BPE's loop with the argmax switched to
-    count(ab)/(count(a)·count(b)), exact DECIMAL arithmetic."""
+    """WordPiece tokenizer training, 8 merge rounds → the ordered merge
+    table with quantized likelihood scores (text.wordpiece_train):
+    BPE's trainer with the argmax switched to count(ab)/(count(a)·
+    count(b)), exact integer arithmetic."""
     return text.wordpiece_train(_docs(spark, sf_dir), n_merges=8)
 
 
@@ -7882,7 +7864,6 @@ v{i} AS (SELECT CASE WHEN len(y.sy) < 2 OR b.a IS NULL THEN y.s ELSE
 
 
 ORACLES["wordpiece_train"] = _wordpiece_train_oracle()
-ORACLES["wordpiece_train_batched"] = _wordpiece_train_oracle()
 
 
 def q_kg_quotient(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1547,6 +1547,8 @@ def test_paragraph_dedup_first_wins_and_totality(spark):
         (1, "Beta body.\n\n  \t \n\ncopyright 2031 site!!"),
         (2, "Gamma body."),
         (3, ""),
+        # CRLF paragraph breaks (WARC/HTTP bodies) split like LF ones
+        (4, "Delta body.\r\n\r\n \r\n\r\nCOPYRIGHT 1999 SITE\r\n"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: r for r in paragraph_dedup(df).collect()}
@@ -1559,3 +1561,5 @@ def test_paragraph_dedup_first_wins_and_totality(spark):
     assert (got[2].n_paras, got[2].n_kept) == (1, 1)
     # total over input
     assert (got[3].n_paras, got[3].n_kept, got[3].clean_text) == (0, 0, "")
+    assert (got[4].n_paras, got[4].n_kept) == (2, 1)
+    assert got[4].clean_text == "Delta body."

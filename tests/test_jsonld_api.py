@@ -262,6 +262,9 @@ def test_null_member_graph_wrapper_regression():
 
 @settings(max_examples=300, deadline=None)
 @given(_fdoc)
+@example('{"ex:q": [{"@list": false}, {"@list": false}]}')  # r5 falsifier:
+# identical sibling lists must stay two bnode chains
+@example('{"@id": null, "ex:q": [{"@list": false}, {"@list": false}]}')
 def test_flatten_fuzz_toRdf_invariant(text):
     orig, _ = jsonld.parse(text, base_uri="urn:base:x", doc_key="f")
     expanded, _ = api.expand(text, base_uri="urn:base:x")
@@ -270,6 +273,29 @@ def test_flatten_fuzz_toRdf_invariant(text):
         api.canonical_json(flat), base_uri="urn:base:x", doc_key="f"
     )
     assert isomorphic(orig, rt), text
+
+
+def test_flatten_and_frame_keep_identical_sibling_lists():
+    """Each @list object is its own bnode chain, so two identical sibling
+    lists give two chains (6 triples). Flatten and frame used to merge
+    them by value into one chain (3 triples) — r5 verdict."""
+    text = '{"@id":"urn:s","ex:q":[{"@list":[false]},{"@list":[false]}]}'
+    orig, _ = jsonld.parse(text, base_uri="urn:base:x", doc_key="f")
+    assert len(orig) == 6
+    expanded, _ = api.expand(text, base_uri="urn:base:x")
+    flat = api.flatten(expanded)
+    framed, _ = api.frame(expanded, {}, base_uri="urn:base:x")
+    for out in (flat, framed):
+        rt, _ = jsonld.parse(
+            api.canonical_json(out), base_uri="urn:base:x", doc_key="f"
+        )
+        assert len(rt) == 6 and isomorphic(orig, rt), out
+    # equal plain values still dedupe: RDF graphs are sets
+    expanded, _ = api.expand(
+        '{"@id":"urn:s","ex:q":[1, 1, {"@id":"urn:o"}, {"@id":"urn:o"}]}'
+    )
+    s_node = next(n for n in api.flatten(expanded) if n["@id"] == "urn:s")
+    assert s_node["ex:q"] == [{"@id": "urn:o"}, {"@value": 1}]
 
 
 @settings(max_examples=200, deadline=None)
@@ -371,6 +397,8 @@ def test_frame_property_presence_match():
 
 @settings(max_examples=200, deadline=None)
 @given(_fdoc)
+@example('{"ex:q": [{"@list": false}, {"@list": false}]}')  # r5 falsifiers
+@example('{"@id": null, "ex:q": [{"@list": false}, {"@list": false}]}')
 def test_frame_fuzz_trivial_toRdf_invariant(text):
     orig, _ = jsonld.parse(text, base_uri="urn:base:x", doc_key="f")
     if any(t[6] is not None for t in orig):

@@ -174,34 +174,70 @@ def test_bpe_pair_counts_tiebreak_and_k(spark):
         bpe_pair_counts(df, k=0)
 
 
+def _mirror_stats(segs, word_counts):
+    """Pair and symbol totals recounted from scratch over every word."""
+    pairs, syms_n = {}, {}
+    for w, syms in segs.items():
+        c = word_counts[w]
+        for i in range(len(syms) - 1):
+            p = (syms[i], syms[i + 1])
+            pairs[p] = pairs.get(p, 0) + c
+        for sym in syms:
+            syms_n[sym] = syms_n.get(sym, 0) + c
+    return pairs, syms_n
+
+
+def _mirror_merge(segs, a, b):
+    """Greedy left-to-right non-overlapping merge of (a, b) in every
+    word's symbol list."""
+    for w, syms in segs.items():
+        out, i = [], 0
+        while i < len(syms):
+            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                out.append(a + b)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        segs[w] = tuple(out)
+
+
 def _bpe_train_mirror(word_counts, n_merges):
     """subword-nmt-style reference: overlap-counting pair statistics,
-    greedy left-to-right non-overlapping merge on symbol lists."""
-    vocab = {tuple(w): c for w, c in word_counts.items()}
+    greedy left-to-right non-overlapping merge on symbol lists →
+    (merges, {word: final symbol tuple})."""
+    segs = {w: tuple(w) for w in word_counts}
     merges = []
     for step in range(1, n_merges + 1):
-        stats = {}
-        for syms, c in vocab.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                stats[p] = stats.get(p, 0) + c
+        stats, _ = _mirror_stats(segs, word_counts)
         if not stats:
             break
         (a, b), n = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((step, f"{a} {b}", a + b, n))
-        new_vocab = {}
-        for syms, c in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            key = tuple(out)
-            new_vocab[key] = new_vocab.get(key, 0) + c
-        vocab = new_vocab
+        _mirror_merge(segs, a, b)
+    return merges, segs
+
+
+def _wordpiece_train_mirror(word_counts, n_merges, precision=10**12):
+    """WordPiece reference: the BPE mirror with the argmax switched to
+    the quantized likelihood score n(ab)·precision // (n(a)·n(b)),
+    every total recounted from scratch each round."""
+    segs = {w: tuple(w) for w in word_counts}
+    merges = []
+    for step in range(1, n_merges + 1):
+        stats, syms_n = _mirror_stats(segs, word_counts)
+        if not stats:
+            break
+        (a, b), n = min(
+            stats.items(),
+            key=lambda kv: (
+                -(kv[1] * precision // (syms_n[kv[0][0]] * syms_n[kv[0][1]])),
+                kv[0],
+            ),
+        )
+        q = n * precision // (syms_n[a] * syms_n[b])
+        merges.append((step, f"{a} {b}", a + b, q, n))
+        _mirror_merge(segs, a, b)
     return merges
 
 
@@ -225,12 +261,32 @@ def test_bpe_train_matches_subword_nmt_mirror(spark):
         for w in t.split():
             if len(w) >= 2:
                 wc[w] = wc.get(w, 0) + 1
-    expected = _bpe_train_mirror(wc, 6)
+    expected, _ = _bpe_train_mirror(wc, 6)
     got = [
         (r["step"], r["pair"], r["merged"], r["n"])
         for r in bpe_train(df, n_merges=6).orderBy("step").collect()
     ]
     assert got == expected
+
+
+def test_wordpiece_train_matches_mirror(spark):
+    from semargl_spark.operators.text import wordpiece_train
+
+    texts = [
+        "aaaaa aaaa aaa ababab qz qz qzqz",
+        "banana bandana aaaaa",
+        "low lower lowest low low qz",
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
+    )
+    wc = {}
+    for t in texts:
+        for w in t.split():
+            wc[w] = wc.get(w, 0) + 1
+    got = [tuple(r) for r in
+           wordpiece_train(df, n_merges=5).orderBy("step").collect()]
+    assert got == _wordpiece_train_mirror(wc, 5)
 
 
 def test_bpe_segment_matches_mirror_vocab(spark):
@@ -245,24 +301,9 @@ def test_bpe_segment_matches_mirror_vocab(spark):
         for w in t.split():
             if len(w) >= 2:
                 wc[w] = wc.get(w, 0) + 1
-    # replay the mirror's merges over the vocab to get expected segments
-    vocab = {tuple(w): (w, c) for w, c in wc.items()}
-    for _, pair, merged, _n in _bpe_train_mirror(wc, 4):
-        a, b = pair.split(" ")
-        new = {}
-        for syms, (w, c) in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new[tuple(out)] = (w, c)
-        vocab = new
+    _, segs = _bpe_train_mirror(wc, 4)
     expected = {
-        w: (" ".join(syms), len(syms), c) for syms, (w, c) in vocab.items()
+        w: (" ".join(syms), len(syms), wc[w]) for w, syms in segs.items()
     }
     got = {
         r["word"]: (r["segmented"], r["n_subwords"], r["c"])
@@ -431,7 +472,7 @@ def test_bpe_oracle_fold_fuzz_matches_mirror():
         wc = {}
         for w in words:
             wc[w] = wc.get(w, 0) + 1
-        merges = _bpe_train_mirror(wc, 3)
+        merges, segs = _bpe_train_mirror(wc, 3)
         con = duckdb.connect()
         vals = ", ".join(f"('{w}', {c})" for w, c in wc.items())
         sql = f"""
@@ -468,28 +509,8 @@ UNION ALL
         )
         got_vocab = sorted((r[1], r[3]) for r in rows if r[0] == 0)
         assert got_merges == [tuple(m) for m in merges]
-        # replay mirror merges over the vocab for expected segments
-        vocab = {tuple(w): c for w, c in wc.items()}
-        for _, pair, merged, _n in merges:
-            a, b = pair.split(" ")
-            new = {}
-            for syms, c in vocab.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and syms[i] == a
-                        and syms[i + 1] == b
-                    ):
-                        out.append(merged)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                new[tuple(out)] = new.get(tuple(out), 0) + c
-            vocab = new
         expected_vocab = sorted(
-            (" ".join(syms), c) for syms, c in vocab.items()
+            (" ".join(syms), wc[w]) for w, syms in segs.items()
         )
         assert got_vocab == expected_vocab
 
@@ -781,31 +802,12 @@ def test_html_main_blocks_separates_boilerplate(spark):
     assert nav.link_pm == 900
 
 
-def test_bpe_train_batched_matches_loop(spark):
-    """The driver-local fast trainer must be BIT-identical to the
-    per-round distributed loop on the same corpus."""
-    from semargl_spark.operators.text import bpe_train, bpe_train_batched
-
-    texts = [
-        "aaaaa aaaa aaa ababab",
-        "banana bandana aaaaa",
-        "low lower lowest low low",
-        "abab aa bb ab ba",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    loop = [tuple(r) for r in bpe_train(df, n_merges=6).orderBy("step").collect()]
-    fast = [tuple(r) for r in
-            bpe_train_batched(df, n_merges=6).orderBy("step").collect()]
-    assert fast == loop
-
-
 def test_fast_bpe_merges_fuzz_matches_mirror():
     """Property: the incremental pair-index + lazy-heap trainer equals
     the recount-from-scratch mirror on random small-alphabet corpora
     (stale-heap handling, overlap counting, merged-symbol
-    re-participation, tie-breaks all arise)."""
+    re-participation, tie-breaks all arise) — both the merge table and
+    every word's final segmentation, which bpe_segment emits."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -821,53 +823,56 @@ def test_fast_bpe_merges_fuzz_matches_mirror():
         wc = {}
         for w, c in pairs:
             wc[w] = wc.get(w, 0) + c
-        expected = _bpe_train_mirror(wc, 8)
-        got = _fast_bpe_merges(sorted(wc.items()), 8)
+        expected, segs = _bpe_train_mirror(wc, 8)
+        words = sorted(wc.items())
+        got, got_segs = _fast_bpe_merges(words, 8)
         assert got == expected
+        assert [tuple(s) for s in got_segs] == [segs[w] for w, _ in words]
 
     check()
 
 
-def test_wordpiece_train_batched_matches_loop(spark):
-    from semargl_spark.operators.text import (
-        wordpiece_train,
-        wordpiece_train_batched,
-    )
+def test_wordpiece_merges_fuzz_matches_mirror():
+    """Property: the driver-local WordPiece loop (incremental pair and
+    symbol totals, per-round likelihood scan) equals the
+    recount-from-scratch mirror; a small precision makes score ties,
+    and so the pair-ascending tie-break, common."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
 
-    texts = [
-        "aaaaa aaaa aaa ababab qz qz qzqz",
-        "banana bandana aaaaa",
-        "low lower lowest low low qz",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    loop = [tuple(r) for r in
-            wordpiece_train(df, n_merges=5).orderBy("step").collect()]
-    fast = [tuple(r) for r in
-            wordpiece_train_batched(df, n_merges=5).orderBy("step").collect()]
-    assert fast == loop
+    from semargl_spark.operators.text import _wordpiece_merges
+
+    word = st.text(alphabet="ab0", min_size=2, max_size=12)
+    corpus = st.lists(st.tuples(word, st.integers(1, 9)),
+                      min_size=1, max_size=15)
+
+    @given(corpus, st.sampled_from([10, 10**12]))
+    @settings(max_examples=300, deadline=None)
+    def check(pairs, precision):
+        wc = {}
+        for w, c in pairs:
+            wc[w] = wc.get(w, 0) + c
+        got = _wordpiece_merges(sorted(wc.items()), 8, precision)
+        assert got == _wordpiece_train_mirror(wc, 8, precision)
+
+    check()
 
 
-def test_bpe_train_batched_bounding_knobs(spark):
+def test_bpe_train_bounding_knobs(spark):
     """min_count / max_words bound driver state deterministically: the
     truncated table trains as if the dropped words never existed."""
-    from semargl_spark.operators.text import bpe_train, bpe_train_batched
+    from semargl_spark.operators.text import bpe_train
 
     df = spark.createDataFrame(
         [(0, "aaaa aaaa aaaa bbbb"), (1, "aaaa cccc")],
         "doc_id int, text string",
     )
     # min_count=2 keeps only 'aaaa' (freq 4)
-    out = bpe_train_batched(df, n_merges=2, min_count=2).collect()
+    out = bpe_train(df, n_merges=2, min_count=2).collect()
     assert [r["merged"] for r in out] == ["aa", "aaaa"]
     # max_words=1 keeps the (c desc, word asc) top word only — 'aaaa'
-    out2 = bpe_train_batched(df, n_merges=2, max_words=1).collect()
+    out2 = bpe_train(df, n_merges=2, max_words=1).collect()
     assert [r["merged"] for r in out2] == ["aa", "aaaa"]
-    # and unbounded equals the loop trainer
-    loop = [tuple(r) for r in bpe_train(df, n_merges=3).collect()]
-    fast = [tuple(r) for r in bpe_train_batched(df, n_merges=3).collect()]
-    assert fast == loop
 
 
 def test_sentence_split_guards_and_terminators(spark):
