@@ -144,13 +144,14 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
     from pyspark.sql import functions as F
 
     from semargl_spark.operators.canon import connected_components
-    from semargl_spark.operators.extract import errors, extract_statements, triples
+    from semargl_spark.operators.extract import extract_statements, triples
     from semargl_spark.operators.link import fuzzy_link_entities, link_entities
     from semargl_spark.operators.materialize import (
         lineage_rows,
         materialize_kg,
         write_lineage,
     )
+    from semargl_spark.spark_util import is_missing_path
 
     run_id = run_id or f"run-{int(time.time())}"
     t_start = time.perf_counter()
@@ -159,61 +160,57 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
     # checkpoint-resume (north_rule): the lineage table doubles as the
     # stage ledger — a stage whose lineage rows for this run_id are
     # already recorded completed its (idempotent) write before the
-    # previous attempt died, so --resume skips it
-    done_stages: set[str] = set()
+    # previous attempt died, so --resume skips it and reports its
+    # summary row (partition_id = -1) instead
+    done: dict[str, dict] = {}
     if resume:
         try:
-            done_stages = {
-                r["stage"]
-                for r in spark.read.parquet(f"{output}/lineage")
-                .filter(F.col("run_id") == run_id)
-                .select("stage")
-                .distinct()
-                .collect()
+            ledger = spark.read.parquet(f"{output}/lineage")
+        except Exception as exc:
+            if not is_missing_path(exc):
+                raise
+        else:
+            done = {
+                r["stage"]: {"output_rows": r["output_rows"],
+                             "error_rows": r["error_rows"]}
+                for r in ledger.filter(
+                    (F.col("run_id") == run_id) & (F.col("partition_id") == -1)
+                ).collect()
             }
-        except Exception:  # no lineage yet → fresh run
-            done_stages = set()
 
-    # named observation on the extraction output: per-run metric rows
-    # (statements / error statements) collected by the JVM during the
-    # job's own actions — zero extra passes, the production-monitoring
-    # hook a 10^12-turn run exposes to its scheduler
-    from pyspark.sql import Observation
+    def stage(name, frame, table=None) -> dict:
+        """Writes ``frame`` (to ``<output>/<table>`` when given) and then
+        its ledger rows, unless the resumed run already recorded the
+        stage; either way returns the stage's summary row — the only
+        count of ``frame`` the run takes."""
+        if name in done:
+            return done[name]
+        if table:
+            frame.write.mode("overwrite").parquet(f"{output}/{table}")
+        return write_lineage(lineage_rows(frame, run_id, name),
+                             f"{output}/lineage")
 
-    # unnamed → a session-unique internal name; a fixed name would
-    # collide when run() executes twice in one session (resume/replay)
-    obs = Observation()
     statements = extract_statements(
         transcripts, context_registry=context_registry
-    ).observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum((F.col("obj_kind") == "error").cast("long")).alias("error_rows"),
     ).persist()
     st = triples(statements)
-    err = errors(statements)
+    extracted = stage("extract", statements)
+    counts = {}
 
-    resumed = sorted(done_stages)
-    if "extract" not in done_stages:
-        write_lineage(lineage_rows(st, run_id, "extract"), f"{output}/lineage")
-
+    links = None
     equiv = None
     if dictionary:
         dict_df = spark.read.parquet(dictionary)
         linker = fuzzy_link_entities if fuzzy_link else link_entities
         links = linker(st, dict_df).persist()
-        if "link" not in done_stages:
-            links.write.mode("overwrite").parquet(f"{output}/links")
-            write_lineage(lineage_rows(links, run_id, "link"), f"{output}/lineage")
+        stage("link", links, "links")
         equiv = links.select(
             F.col("mention_node").alias("src"), F.col("canonical_iri").alias("dst")
         ).distinct()
 
     components = connected_components(equiv) if equiv is not None else None
-    if components is not None and "canon" not in done_stages:
-        write_lineage(
-            lineage_rows(components, run_id, "canon"), f"{output}/lineage"
-        )
+    if components is not None:
+        stage("canon", components)
 
     if ontology:
         # RDFS materialization BEFORE merge: entailed triples join the
@@ -242,11 +239,8 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             F.lit(0).cast("int").alias("turn_idx"),
         )
         st = st.unionByName(inferred, allowMissingColumns=True)
-        if "infer" not in done_stages:
-            write_lineage(lineage_rows(inferred, run_id, "infer"),
-                          f"{output}/lineage")
+        stage("infer", inferred)
 
-    summary_owl = None
     if owl_axioms:
         # OWL-RL property semantics over the IRI-valued statement set:
         # inverse/symmetric mirrors, transitive fixpoints, and
@@ -281,12 +275,8 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             F.lit(0).cast("int").alias("turn_idx"),
         ).localCheckpoint(eager=False)
         st = st.unionByName(owl_inf, allowMissingColumns=True)
-        if "owl" not in done_stages:
-            write_lineage(lineage_rows(owl_inf, run_id, "owl"),
-                          f"{output}/lineage")
-        summary_owl = owl_inf.count()
+        counts["owl_inferred"] = stage("owl", owl_inf)["output_rows"]
 
-    summary_resolved = None
     if resolve_functional:
         # conflict resolution: for each listed predicate keep ONE object
         # per subject by 2-round source-reliability voting (conv_id is
@@ -309,12 +299,8 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
                 winners, ["subj", "pred", "obj"], "left_semi"
             )
         )
-        if "resolve" not in done_stages:
-            write_lineage(lineage_rows(winners, run_id, "resolve"),
-                          f"{output}/lineage")
-        summary_resolved = winners.count()
+        counts["resolved_claims"] = stage("resolve", winners)["output_rows"]
 
-    summary_fused = None
     if fuse_sameas:
         # entity fusion: close the sameAs pairs now present (asserted +
         # owl-inferred) into classes, rewrite IRI subjects/objects to
@@ -346,12 +332,9 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             )
             .drop("_csub", "_cobj")
         )
-        if "fuse" not in done_stages:
-            write_lineage(lineage_rows(mapping, run_id, "fuse"),
-                          f"{output}/lineage")
-        summary_fused = mapping.count()
+        counts["fused_nodes"] = stage("fuse", mapping)["output_rows"]
 
-    if shapes and "validate" not in done_stages:
+    if shapes:
         # data-quality side output: violation rows only, never the
         # conforming majority
         from semargl_spark.operators.validate import validate_shapes
@@ -362,14 +345,10 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             st.select("subj", "pred", "obj", "obj_kind", "dtype").distinct(),
             shape_list,
         )
-        violations.write.mode("overwrite").parquet(f"{output}/violations")
-        write_lineage(lineage_rows(violations, run_id, "validate"),
-                      f"{output}/lineage")
-        summary_violations = violations.count()
-    else:
-        summary_violations = None
+        counts["violations"] = stage(
+            "validate", violations, "violations"
+        )["output_rows"]
 
-    summary_content = None
     if content_address:
         # content addressing runs over the ORIGINAL per-document
         # statements (pre-fusion rewrites — the address identifies what
@@ -379,17 +358,11 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
         addrs = c14n_doc_hashes(
             st.filter(F.col("conv_id") != "owl")
         ).localCheckpoint(eager=False)
-        if "c14n" not in done_stages:
-            addrs.write.mode("overwrite").parquet(
-                f"{output}/content_addresses"
-            )
-            write_lineage(lineage_rows(addrs, run_id, "c14n"),
-                          f"{output}/lineage")
-        summary_content = addrs.filter(F.col("error").isNull()).select(
+        stage("c14n", addrs, "content_addresses")
+        counts["distinct_content"] = addrs.filter(F.col("error").isNull()).select(
             "doc_sha256"
         ).distinct().count()
 
-    summary_sft = None
     if sft_render:
         # SFT exit over the SAME input transcripts (pre-extraction
         # surface): chat-template rendering with loss-mask spans plus
@@ -415,53 +388,24 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             staged, capacity=sft_capacity, n_shards=64,
             id_col="conv_num", text_col="rendered",
         )
-        if "sft" not in done_stages:
-            rendered.write.mode("overwrite").parquet(f"{output}/sft")
-            manifest.write.mode("overwrite").parquet(
-                f"{output}/sft_manifest"
-            )
-            write_lineage(lineage_rows(rendered, run_id, "sft"),
-                          f"{output}/lineage")
-        summary_sft = {
-            "sft_conversations": spark.read.parquet(
-                f"{output}/sft"
-            ).count(),
-            "sft_bins": spark.read.parquet(
-                f"{output}/sft_manifest"
-            ).count(),
-        }
+        if "sft" not in done:
+            manifest.write.mode("overwrite").parquet(f"{output}/sft_manifest")
+        counts["sft_conversations"] = stage("sft", rendered, "sft")["output_rows"]
+        counts["sft_bins"] = spark.read.parquet(f"{output}/sft_manifest").count()
 
-    if "merge" in done_stages:
-        # whole run already completed: report from the materialized tables
+    if "merge" in done:
+        # whole run already completed: nodes from the table, edges from
+        # the merge ledger row
         summary = {
             "run_id": run_id,
             "nodes": spark.read.parquet(f"{output}/nodes").count(),
-            "edges": spark.read.parquet(f"{output}/edges").count(),
+            "edges": done["merge"]["output_rows"],
         }
     else:
         summary = materialize_kg(st, components, output, run_id)
-    if summary_violations is not None:
-        summary["violations"] = summary_violations
-    if summary_owl is not None:
-        summary["owl_inferred"] = summary_owl
-    if summary_resolved is not None:
-        summary["resolved_claims"] = summary_resolved
-    if summary_fused is not None:
-        summary["fused_nodes"] = summary_fused
-    if summary_content is not None:
-        summary["distinct_content"] = summary_content
-    if summary_sft is not None:
-        summary.update(summary_sft)
-    summary["errors"] = err.count()
-    summary["statements"] = st.count()
-    try:
-        summary["observed"] = {k: int(v) for k, v in obs.get.items()}
-    except Exception:
-        # metrics are ADVISORY and must never fail the job: when the
-        # extraction plan is served from a structurally-equal cached
-        # plan of an earlier in-session run (replay/concurrent resume),
-        # the observe node never executes and getRow() has no metrics
-        summary["observed"] = None
+    summary.update(counts)
+    summary["errors"] = extracted["error_rows"]
+    summary["statements"] = extracted["output_rows"] - extracted["error_rows"]
     if sparql:
         # query the JUST-MATERIALIZED edge table (reads back from disk,
         # so pushed predicate constants hit the parquet scan and the
@@ -493,9 +437,11 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
                 res = sparql_select(edges_df, sparql)
             res.write.mode("overwrite").parquet(f"{output}/query")
             summary["query_rows"] = spark.read.parquet(f"{output}/query").count()
-    if resumed:
-        summary["resumed_stages"] = resumed
+    if done:
+        summary["resumed_stages"] = sorted(done)
     statements.unpersist()
+    if links is not None:
+        links.unpersist()
     # in-job wall (excludes JVM/session boot — the long-running-
     # application view a cluster deployment amortizes); used by
     # tools/bench_job_scaling.py

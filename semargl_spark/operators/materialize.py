@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..spark_util import is_missing_path
@@ -116,21 +116,21 @@ def lineage_rows(
         (F.hash(*cols) if row_hash is None else row_hash).alias("h"),
         err.alias("is_err"),
     )
-    aggs = [
-        F.count("*").cast("long").alias("output_rows"),
-        F.coalesce(F.sum("is_err"), F.lit(0)).cast("long").alias("error_rows"),
-        F.format_string(
-            "%016x", F.coalesce(F.sum(F.col("h").cast("long")), F.lit(0))
-        ).alias("checksum"),
-    ]
-    per_partition = hashed.groupBy("partition_id").agg(*aggs)
-    # stage-summary row, partition_id = -1: a GLOBAL aggregate yields one
-    # row even for an empty stage (e.g. canon with no non-trivial
-    # merges), so the ledger always records stage completion — a
-    # partition-only ledger would re-run empty stages on every resume
-    summary = hashed.agg(*aggs).select(
-        F.lit(-1).alias("partition_id"), "output_rows", "error_rows", "checksum"
+    per_partition = hashed.groupBy("partition_id").agg(
+        F.count("*").alias("output_rows"),
+        F.sum("is_err").alias("error_rows"),
+        F.sum(F.col("h").cast("long")).alias("h"),
     )
+    # stage-summary row, partition_id = -1: the sum of the partition rows
+    # (one scan of ``df``; the second reader reuses the exchange). A
+    # global aggregate yields one row even for an empty stage (e.g.
+    # canon with no non-trivial merges), so the ledger always records
+    # stage completion — a partition-only ledger would re-run empty
+    # stages on every resume
+    summary = per_partition.agg(*(
+        F.coalesce(F.sum(c), F.lit(0)).alias(c)
+        for c in ("output_rows", "error_rows", "h")
+    )).withColumn("partition_id", F.lit(-1))
     return per_partition.unionByName(summary).select(
         F.lit(run_id).alias("run_id"),
         F.lit(stage).alias("stage"),
@@ -138,12 +138,12 @@ def lineage_rows(
         F.col("output_rows").alias("input_rows"),
         "output_rows",
         "error_rows",
-        "checksum",
+        F.format_string("%016x", "h").alias("checksum"),
         F.lit(0).cast("long").alias("wall_ms"),
     )
 
 
-def write_lineage(lineage: DataFrame, path: str) -> None:
+def write_lineage(lineage: DataFrame, path: str) -> dict:
     """Idempotent ledger write: one physical partition per (run_id,
     stage), dynamic-overwritten — re-running a stage replaces its own
     ledger rows instead of appending duplicates, so the resume reader
@@ -151,13 +151,24 @@ def write_lineage(lineage: DataFrame, path: str) -> None:
     would make this a MERGE on (run_id, stage, partition_id); dynamic
     partition overwrite is the parquet stand-in with the same
     idempotency contract, minus snapshot isolation for truly
-    simultaneous writers.)"""
+    simultaneous writers.)
+
+    Returns the stage-summary row's ``{"output_rows", "error_rows"}``,
+    observed by the write itself (no extra Spark job)."""
+    obs = Observation()
+    summary = F.col("partition_id") == -1
     (
-        lineage.write.mode("overwrite")
+        lineage.observe(
+            obs,
+            *(F.sum(F.when(summary, F.col(c))).alias(c)
+              for c in ("output_rows", "error_rows")),
+        )
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("run_id", "stage")
         .parquet(path)
     )
+    return obs.get
 
 
 def write_partitioned(df: DataFrame, path: str, bucket_col: str = "src") -> None:
@@ -179,10 +190,10 @@ def iceberg_catalog(spark) -> str | None:
     points at an Iceberg Spark catalog class. Deployments can name
     theirs explicitly via ``spark.semargl.iceberg.catalog``; otherwise
     the conventional names (``iceberg``, ``local``, ``spark_catalog``)
-    are probed. This is the feature flag that routes
-    :func:`merge_upsert` to a real ``MERGE INTO`` instead of the
-    parquet dynamic-overwrite stand-in — pure conf inspection, no JVM
-    access, so it works identically under Spark Connect."""
+    are probed. Callers use it to decide whether to pass
+    ``backend="iceberg"`` to :func:`merge_upsert` — pure conf
+    inspection, no JVM access, so it works identically under Spark
+    Connect."""
     names: list[str] = []
     try:
         names.append(spark.conf.get("spark.semargl.iceberg.catalog"))
@@ -211,24 +222,28 @@ def _merge_upsert_iceberg(
     upsert, so the two backends are interchangeable to callers. The
     update/insert split is counted with a left-semi against the current
     snapshot BEFORE the merge (Iceberg's MERGE reports no row counts to
-    the session); a missing table is created from the delta."""
-    try:
-        cur = spark.table(table)
-    except Exception:
-        updates.writeTo(table).using("iceberg").create()
-        return {"updated": 0, "inserted": updates.count()}
-    n_updated = cur.join(updates.select(*key_cols), key_cols, "left_semi").count()
-    n_inserted = updates.count() - n_updated
+    the session); a missing table is created from the delta. ``updates``
+    is persisted for the duration: the counts and the merge read it."""
+    updates = updates.persist()
     view = f"_semargl_merge_src_{abs(hash(table)) % 10**8}"
-    updates.createOrReplaceTempView(view)
-    on = " AND ".join(f"t.{k} = u.{k}" for k in key_cols)
-    spark.sql(
-        f"MERGE INTO {table} t USING {view} u ON {on} "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-    spark.catalog.dropTempView(view)
-    return {"updated": n_updated, "inserted": n_inserted}
+    try:
+        if not spark.catalog.tableExists(table):
+            updates.writeTo(table).using("iceberg").create()
+            return {"updated": 0, "inserted": updates.count()}
+        keys = updates.select(*key_cols)
+        n_updated = spark.table(table).join(keys, key_cols, "left_semi").count()
+        n_inserted = updates.count() - n_updated
+        updates.createOrReplaceTempView(view)
+        on = " AND ".join(f"t.{k} = u.{k}" for k in key_cols)
+        spark.sql(
+            f"MERGE INTO {table} t USING {view} u ON {on} "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+        return {"updated": n_updated, "inserted": n_inserted}
+    finally:
+        spark.catalog.dropTempView(view)
+        updates.unpersist()
 
 
 def merge_upsert(
@@ -237,7 +252,7 @@ def merge_upsert(
     updates: DataFrame,
     key_cols: list[str],
     bucket_col: str | None = None,
-    backend: str | None = None,
+    backend: str = "parquet",
 ) -> dict:
     """``MERGE INTO`` stand-in over the bucketed parquet table at
     ``path``: WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN
@@ -261,20 +276,13 @@ def merge_upsert(
     concurrent-writer atomicity, is exactly what the Iceberg swap buys;
     the row-level outcome is identical).
 
-    Backend selection: ``backend="iceberg"`` (or auto, when ``path``
-    has no ``/`` and :func:`iceberg_catalog` finds a configured
-    catalog) treats ``path`` as an Iceberg table identifier and runs a
-    real ``MERGE INTO`` (:func:`_merge_upsert_iceberg`);
-    ``backend="parquet"`` or a filesystem path keeps the stand-in. The
+    Backend selection is explicit: ``backend="iceberg"`` treats ``path``
+    as an Iceberg table identifier and runs a real ``MERGE INTO``
+    (:func:`_merge_upsert_iceberg`); the default ``"parquet"`` keeps the
+    stand-in, whatever catalogs the session configures. The
     differential test parametrizes over both backends and skips the
-    Iceberg leg when no runtime is on the classpath.
+    Iceberg leg when no catalog is configured.
     """
-    if backend is None:
-        backend = (
-            "iceberg"
-            if "/" not in path and iceberg_catalog(spark)
-            else "parquet"
-        )
     if backend == "iceberg":
         return _merge_upsert_iceberg(spark, path, updates, key_cols)
     bucket_col = bucket_col or key_cols[0]
@@ -326,23 +334,25 @@ def materialize_kg(
     out_dir: str,
     run_id: str | None = None,
 ) -> dict:
-    """merge stage: write nodes/edges/lineage; returns summary counts.
+    """merge stage: write nodes/edges/lineage; returns summary counts
+    (``edges`` is the merge ledger's summary row).
 
     nodes/edges are checkpointed before the writes: each is otherwise
-    recomputed (distinct shuffle included) for the write, the lineage
-    audit, and the count — and the lineage checksum must describe the
-    same materialization that was written."""
+    recomputed (distinct shuffle included) for the write and the lineage
+    audit (and nodes for the count) — and the lineage checksum must
+    describe the same materialization that was written."""
     run_id = run_id or f"run-{int(time.time())}"
     nodes = kg_nodes(triples, components).localCheckpoint(eager=False)
     edges = kg_edges(triples, components).localCheckpoint(eager=False)
     write_partitioned(nodes, f"{out_dir}/nodes", "node")
     write_partitioned(edges, f"{out_dir}/edges", "src")
-    lineage = lineage_rows(edges, run_id, "merge")
-    write_lineage(lineage, f"{out_dir}/lineage")
+    merged = write_lineage(
+        lineage_rows(edges, run_id, "merge"), f"{out_dir}/lineage"
+    )
     return {
         "run_id": run_id,
         "nodes": nodes.count(),
-        "edges": edges.count(),
+        "edges": merged["output_rows"],
     }
 
 

@@ -159,9 +159,11 @@ def _frame_record_spans(data: bytes):
 def gunzip_members(data: bytes) -> bytes:
     """Concatenated gzip members → concatenated plaintext — the
     ``.warc.gz`` layout (Common Crawl compresses each record as its own
-    gzip member so readers can seek to records). Best-effort: a
-    corrupted member ends the scan and the prefix decodes, matching the
-    truncated-tail tolerance of the framing itself.
+    gzip member so readers can seek to records). Best-effort: a corrupt
+    or truncated member ends the scan and the complete members before
+    it decode. A partial final member is dropped whole, never decoded in
+    part: the offset-indexed reader can only index complete members, and
+    both readers must emit identical rows.
 
     Implemented over the same bounded-chunk streaming scan the offset
     index uses (:func:`_gz_member_spans`): handing zlib the whole
@@ -277,7 +279,8 @@ def _gz_member_spans(f, chunk_bytes: int = 1 << 22):
     current member's plaintext is, i.e. one record for the
     member-per-record Common Crawl layout). Best-effort like
     :func:`gunzip_members`: a corrupt or truncated member ends the
-    scan and the prefix indexes.
+    scan and only the complete members before it are yielded (a partial
+    final member is dropped, as :func:`gunzip_members` drops it).
 
     Feeding discipline: zlib copies whatever it did not consume into
     ``unused_data`` on EVERY member end, so handing it the whole

@@ -188,23 +188,86 @@ def test_job_shapes_and_ontology_stages(spark, prepared, tmp_path):
     assert {"extract", "infer", "validate"} <= stages
 
 
-def test_job_observed_metrics_match_counts(spark, prepared, tmp_path):
-    """The observe() metric rows equal the summary's own counts —
-    monitoring must never disagree with lineage."""
-    out = str(tmp_path / "out_obs")
-    summary = run(spark, input_path=str(prepared / "in"), output=out,
-                  run_id="robs")
-    obs = summary["observed"]
-    if obs is None:
-        # an earlier in-session run left a structurally-equal cached
-        # extraction plan, so the observe node was served from cache;
-        # clear the cache and re-run to exercise the live path
-        spark.catalog.clearCache()
-        summary = run(spark, input_path=str(prepared / "in"),
-                      output=out, run_id="robs-retry")
-        obs = summary["observed"]
-    assert obs["rows"] == summary["statements"] + summary["errors"]
-    assert obs["error_rows"] == summary["errors"]
+def test_job_summary_counts_match_ledger_rows(spark, prepared, tmp_path):
+    """Every summary count a ledger row holds is that stage's summary
+    row (partition_id = -1) on disk, and a --resume of the finished run
+    reports the same summary from the ledger alone."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    # two domains type every knows-subject twice; a functional rdf:type
+    # turns that into Agent sameAs Person, which fusion merges into
+    # urn:t:Agent — the class the shape then targets
+    rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    onto = tmp_path / "onto.nt"
+    onto.write_text("".join(
+        f"<urn:p:knows> <http://www.w3.org/2000/01/rdf-schema#domain> "
+        f"<urn:t:{c}> .\n" for c in ("Person", "Agent")
+    ))
+    shapes = tmp_path / "shapes.json"
+    shapes.write_text(json.dumps([
+        {"shape_id": "email", "target_class": "urn:t:Agent",
+         "path": "urn:p:email", "min_count": 1},
+    ]))
+    axioms = tmp_path / "axioms.json"
+    axioms.write_text(json.dumps(
+        {"symmetric": ["urn:p:knows"], "functional": [rdf_type]}
+    ))
+    out = str(tmp_path / "out_ledger")
+    kw = dict(
+        input_path=str(prepared / "in"), output=out,
+        dictionary=str(prepared / "dict"), run_id="rledger",
+        shapes=str(shapes), ontology=str(onto), owl_axioms=str(axioms),
+        resolve_functional="urn:p:score", fuse_sameas=True,
+    )
+    fresh = run(spark, **kw)
+
+    ledger = {
+        r["stage"]: (r["output_rows"], r["error_rows"])
+        for r in spark.read.parquet(f"{out}/lineage")
+        .filter((F.col("run_id") == "rledger") & (F.col("partition_id") == -1))
+        .collect()
+    }
+    for key, stage in (("edges", "merge"), ("violations", "validate"),
+                       ("owl_inferred", "owl"), ("resolved_claims", "resolve"),
+                       ("fused_nodes", "fuse")):
+        assert fresh[key] == ledger[stage][0] > 0, key
+    rows, errs = ledger["extract"]
+    assert (fresh["statements"], fresh["errors"]) == (rows - errs, errs)
+
+    resumed = run(spark, **kw, resume=True)
+    assert set(resumed.pop("resumed_stages")) == set(ledger) == {
+        "extract", "link", "canon", "infer", "owl", "resolve", "fuse",
+        "validate", "merge",
+    }
+    resumed.pop("wall_sec")
+    fresh.pop("wall_sec")
+    assert resumed == fresh
+
+
+def test_run_leaves_no_cached_frames(spark, prepared, tmp_path):
+    """run() unpersists every frame it persists."""
+    spark.catalog.clearCache()
+    run(spark, input_path=str(prepared / "in"),
+        output=str(tmp_path / "out_cache"), run_id="rcache",
+        dictionary=str(prepared / "dict"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_resume_propagates_non_missing_ledger_read_errors(spark, prepared,
+                                                          tmp_path):
+    """Only a missing ledger means 'nothing to resume'. A ledger that
+    exists but cannot be read must raise, not silently re-run (and
+    overwrite) every stage."""
+    ledger = tmp_path / "out_bad" / "lineage"
+    ledger.mkdir(parents=True)
+    (ledger / "part-0000.parquet").write_bytes(b"this is not parquet")
+    with pytest.raises(Exception):
+        run(spark, input_path=str(prepared / "in"),
+            output=str(tmp_path / "out_bad"), run_id="rbad", resume=True)
+    assert not (tmp_path / "out_bad" / "nodes").exists()
+    assert (ledger / "part-0000.parquet").read_bytes() == b"this is not parquet"
 
 
 def test_job_sparql_query_surface(spark, prepared, tmp_path):

@@ -295,6 +295,25 @@ def test_split_warc_records_indexed_truncated_tail(spark, tmp_path):
     assert len(rows) == len(recs) - 1  # prefix survives, no raise
 
 
+def test_gunzip_members_drops_partial_final_member():
+    """A partial final member is dropped whole by both the whole-file
+    decoder and the offset-index scan, so the two readers agree."""
+    import io
+
+    from semargl_spark.sources.warc_records import (
+        _gz_member_spans,
+        gunzip_members,
+    )
+
+    recs = _archive_records(2, "cut")[:3]
+    members = [_gz(r) for r in recs]
+    blob = b"".join(members)
+    cut = len(members[0]) + len(members[1]) + len(members[2]) // 2
+    assert gunzip_members(blob[:cut]) == recs[0] + recs[1]
+    spans = list(_gz_member_spans(io.BytesIO(blob[:cut])))
+    assert [plain for _o, _n, plain in spans] == recs[:2]
+
+
 def test_gz_member_scan_mutation_never_raises(spark, tmp_path):
     """E10 never-fail contract for the offset index: random corruption
     or truncation anywhere in a .warc.gz archive must neither raise nor
